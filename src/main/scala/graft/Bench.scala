@@ -13,46 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    // GRAFT_MASTER/GRAFT_JARS mirror graft.Verify's multi-JVM overrides
-    // (e.g. local-cluster[2,8,4096] + the sbt-package jar) so the SAME
-    // harness that times local[32] can time a real two-executor-JVM deploy
-    // — serialization/broadcast costs are invisible in one JVM
-    val master = sys.env.getOrElse("GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-optimize CACHED plan materialization too (off by default
-      // for partitioning-compat only): catalog queries persist intermediates
-      // (signature tables, occurrence caches, loop inputs), and without this
-      // every persist materializes at the session width regardless of size —
-      // q_perplexity_tiers 496→29 tasks, q_digest_persist 468→32 at sf0.1,
-      // and at 100 TB the same flag sizes cached partitions to AQE's
-      // advisory bytes instead of a fixed width (guide §2.2/§6). Loop inputs
-      // whose co-partitioning must survive caching pin it explicitly
-      // (Graph.scala repartition(width, col) notes). Oracle re-verified
-      // 252/252 with the flag on (r17 optimization round).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      // A/B lever for the narrow-input rebalance (operators.Scale.fanOut);
-      // unset = library default (on)
-      .config("graft.fanout.enabled", sys.env.getOrElse("GRAFT_FANOUT", "true"))
-    // GRAFT_CONF="k=v;k2=v2": extra session conf for same-window config
-    // A/Bs (the guide §1 discipline: measure a candidate config against
-    // the unset default in one window, then bake the winner into the code
-    // where the driver's own runs pick it up). The driver never sets it.
-    val builder1 = parseGraftConf(sys.env.get("GRAFT_CONF"))
-      .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
-    val spark = sys.env.get("GRAFT_JARS")
-      .fold(builder1)(j => builder1.config("spark.jars", j))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = harnessSession()
 
     // warmup: scan + shuffle + codegen on the biggest table
     Queries.q1_agg(spark, sfDir).count()
@@ -159,23 +120,72 @@ object Bench {
     // run/outputStrategy in build.sbt bypasses sbt's "[info] " logger,
     // which made the driver's extractor read "parsed": null two rounds
     // running) and a file next to BENCH_FULL.json, so the extractor no
-    // longer depends on log formatting at all. The file inherits fullOut's
-    // subset/scale redirection: a SPARK_GRAFT_ONLY or off-scale run must
-    // not overwrite the committed full-catalog line either.
-    val lineOut =
-      if (fullOut.contains("BENCH_FULL")) fullOut.replace("BENCH_FULL", "BENCH_LINE")
-      else fullOut + ".line.json"
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(lineOut),
-      (stdoutLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // longer depends on log formatting at all.
+    writeLine(lineOut(fullOut), stdoutLine)
     println(stdoutLine)
     spark.stop()
+  }
+
+  /** Where the contract line goes: next to `fullOut`, inheriting its
+    * subset/scale redirection (a SPARK_GRAFT_ONLY or off-scale run must not
+    * overwrite the committed full-catalog line either). Only the file name
+    * is rewritten — a directory that happens to contain "BENCH_FULL" stays
+    * as it is. */
+  def lineOut(fullOut: String): String = {
+    val p = java.nio.file.Paths.get(fullOut)
+    val name = p.getFileName.toString
+    val lineName =
+      if (name.contains("BENCH_FULL")) name.replace("BENCH_FULL", "BENCH_LINE")
+      else name + ".line.json"
+    Option(p.getParent).fold(java.nio.file.Paths.get(lineName))(_.resolve(lineName))
+      .toString
+  }
+
+  /** Writes the contract line file; a failed write warns instead of
+    * throwing, so a path problem cannot discard a finished run whose full
+    * artifact is already written and whose line still goes to stdout. */
+  def writeLine(path: String, line: String): Unit =
+    try java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: java.io.IOException =>
+      System.err.println(s"[bench] WARNING: could not write $path: $e")
+    }
+
+  /** The deployment settings of a harness session, read once from `env`:
+    *  - width: SPARK_GRAFT_CPUS, default max(4, available processors);
+    *  - master: GRAFT_MASTER, default `local[width]` — e.g.
+    *    `local-cluster[2,8,4096]` runs separate executor JVMs, so closure,
+    *    Encoder and broadcast serialization cross a process boundary;
+    *  - deployment conf: GRAFT_JARS as `spark.jars` (ships the packaged
+    *    library to those executors), then the GRAFT_CONF entries.
+    * Returns (master, width, deployment conf). */
+  def harnessSettings(env: Map[String, String]): (String, Int, Seq[(String, String)]) = {
+    val width = env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(math.max(4, Runtime.getRuntime.availableProcessors()))
+    val master = env.getOrElse("GRAFT_MASTER", s"local[$width]")
+    val deploy = env.get("GRAFT_JARS").map("spark.jars" -> _).toSeq ++
+      parseGraftConf(env.get("GRAFT_CONF"))
+    (master, width, deploy)
+  }
+
+  /** The session of every harness main (Bench, Verify, PlanDump, Profile,
+    * Soak, StreamAb, LintAudit): the [[graft.api.StreamContext.localSession]]
+    * recipe under the [[harnessSettings]] deployment. */
+  def harnessSession(): SparkSession = {
+    val (master, width, deploy) = harnessSettings(sys.env)
+    graft.api.StreamContext.session(master, width, deploy)
   }
 
   /** GRAFT_CONF="k=v;k2=v2" → pairs; malformed tokens (no '=') are warned
     * about LOUDLY instead of silently dropped — a typo'd A/B lever would
     * otherwise measure the default config while the operator believes the
-    * candidate applied (r17 advice). Shared by Profile/PlanDump. */
+    * candidate applied (r17 advice). GRAFT_CONF is the one A/B lever:
+    * measure a candidate config against the unset default in one window,
+    * then bake the winner into the recipe. Applied after the recipe, so an
+    * entry overrides it; e.g.
+    * `spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`
+    * runs every streaming twin on the RocksDB state store, the production
+    * provider for state that outgrows the executor heap. */
   def parseGraftConf(env: Option[String]): Seq[(String, String)] =
     env.map(_.split(";").toSeq).getOrElse(Nil).filter(_.trim.nonEmpty).flatMap { kv =>
       kv.split("=", 2) match {
@@ -369,7 +379,10 @@ object Bench {
             val sumRatio = if (cp > 0) cc / cp else -1.0
             val names = controlPanel.map("\"" + _ + "\"")
               .mkString("[", ",", "]")
-            s""""controls":{"cells":$names,"prev_sec":${fmt(cp)},"cur_sec":${fmt(cc)},"ratio":${fmt(sumRatio)},"ratio_median":${fmt(controlRatio)}}"""
+            // null, not the -1.0 sentinel, when no member has a positive
+            // previous time (the ratio_drift_adjusted convention)
+            val median = if (perCellRatios.isEmpty) "null" else fmt(controlRatio)
+            s""""controls":{"cells":$names,"prev_sec":${fmt(cp)},"cur_sec":${fmt(cc)},"ratio":${fmt(sumRatio)},"ratio_median":$median}"""
           }
         // drift-NORMALIZED ratio: total ratio divided by the control
         // panel's (median) ratio, so host drift (which moves both alike)

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -22,52 +21,44 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * purely a local optimization instrument.
   */
 object Profile {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // cached-plan AQE, the Bench session default (note there)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("graft.fanout.enabled", sys.env.getOrElse("GRAFT_FANOUT", "true"))
-      .getOrCreate()
-    // GRAFT_CONF="k=v;k2=v2" extra conf, the Bench A/B lever — applied via
-    // runtime conf here (Profile owns no builder-time-only keys); malformed
-    // tokens warn loudly via the shared parser (r17 advice)
-    Bench.parseGraftConf(sys.env.get("GRAFT_CONF"))
-      .foreach { case (k, v) => spark.conf.set(k, v) }
-    spark.sparkContext.setLogLevel("ERROR")
-
+  /** The scheduler-side volume of one profiled cell, fed by the listener
+    * bus. */
+  final class Counters extends SparkListener {
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     val taskTimeMs = new AtomicLong(0L)
     val shufRead = new AtomicLong(0L)
     val shufWrite = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = t.taskMetrics
-        if (m != null) {
-          taskTimeMs.addAndGet(m.executorRunTime)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      stages.incrementAndGet()
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      tasks.incrementAndGet()
+      val m = t.taskMetrics
+      if (m != null) {
+        taskTimeMs.addAndGet(m.executorRunTime)
+        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       }
-    })
+    }
+    def reset(): Unit = {
+      jobs.set(0); stages.set(0); tasks.set(0)
+      taskTimeMs.set(0L); shufRead.set(0L); shufWrite.set(0L)
+    }
+    /** Every printed counter: the drain poll waits until this is stable,
+      * so no printed value can still lag behind the bus. */
+    def snapshot: Seq[Long] = Seq(jobs.get.toLong, stages.get.toLong,
+      tasks.get.toLong, taskTimeMs.get, shufRead.get, shufWrite.get)
+  }
 
+  def main(args: Array[String]): Unit = {
+    val sfDir = args.headOption.getOrElse(
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val spark = Bench.harnessSession()
+    val c = new Counters
+    spark.sparkContext.addSparkListener(c)
     // same warmup as Bench so the first profiled cell isn't paying JIT
     Queries.q1_agg(spark, sfDir).count()
 
@@ -80,8 +71,7 @@ object Profile {
     println(f"${"query"}%-28s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%6s " +
       f"${"tasks"}%6s ${"task_s"}%8s ${"shR_MB"}%7s ${"shW_MB"}%7s")
     for (_ <- 1 to repeat) entries.foreach { case (name, fn) =>
-      jobs.set(0); stages.set(0); tasks.set(0)
-      taskTimeMs.set(0L); shufRead.set(0L); shufWrite.set(0L)
+      c.reset()
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
@@ -90,17 +80,17 @@ object Profile {
       // stable across two consecutive reads (a fixed sleep undercounted
       // large-backlog cells — the 400+-task before-runs this tool exists
       // to measure; r17 advice), bounded so a dead bus cannot hang us
-      var prev = (-1, -1, -1L)
+      var prev = Seq.empty[Long]
       var same = 0
       var waited = 0
       while (same < 2 && waited < 5000) {
         Thread.sleep(100); waited += 100
-        val now = (jobs.get + stages.get, tasks.get, taskTimeMs.get)
+        val now = c.snapshot
         if (now == prev) same += 1 else { same = 0; prev = now }
       }
-      println(f"$name%-28s $wall%8.3f ${jobs.get}%5d ${stages.get}%6d " +
-        f"${tasks.get}%6d ${taskTimeMs.get / 1e3}%8.3f " +
-        f"${shufRead.get / 1e6}%7.2f ${shufWrite.get / 1e6}%7.2f")
+      println(f"$name%-28s $wall%8.3f ${c.jobs.get}%5d ${c.stages.get}%6d " +
+        f"${c.tasks.get}%6d ${c.taskTimeMs.get / 1e3}%8.3f " +
+        f"${c.shufRead.get / 1e6}%7.2f ${c.shufWrite.get / 1e6}%7.2f")
       spark.sparkContext.setJobDescription(null)
       spark.catalog.clearCache()
     }

@@ -152,20 +152,49 @@ object StreamContext {
     def pumpThread: Thread = pump
   }
 
-  /** Local session with the defaults this engine wants: shuffle partitions
-    * sized for the machine (not 200), AQE on for runtime re-planning (skew
-    * joins, partition coalescing — load-bearing at large scale), UTC. */
-  def localSession(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
+  /** The session recipe: every graft session — the examples, the specs,
+    * the harness mains and the benchmark — is built here, so all of them
+    * run one configuration.
+    *
+    *  - shuffle partitions = `cores` (not Spark's 200);
+    *  - AQE on, for runtime re-planning (skew joins, partition coalescing —
+    *    load-bearing at large scale);
+    *  - AQE may also re-plan CACHED plans
+    *    (`canChangeCachedPlanOutputPartitioning`, off in Spark for
+    *    partitioning compatibility only). The catalog persists
+    *    intermediates (signature tables, occurrence caches, loop inputs);
+    *    without the flag every persist materializes at the session width
+    *    whatever its size — q_perplexity_tiers 496→29 tasks,
+    *    q_digest_persist 468→32 at sf0.1 — and at large scale it sizes
+    *    cached partitions to AQE's advisory bytes instead of a fixed
+    *    width. Loop inputs whose co-partitioning must survive caching pin
+    *    it explicitly (the `repartition(width, col)` notes in Graph.scala).
+    *    The oracle sweep reads 252/252 with the flag on;
+    *  - UTC session time zone, UI off;
+    *  - `nanosAsLong`: events.parquet carries TIMESTAMP(NANOS), read as
+    *    epoch-nano longs and converted exactly in the queries;
+    *  - ANSI off: wrapping Long arithmetic (minhash permutations) needs
+    *    non-ANSI semantics;
+    *  - log level WARN. */
+  def localSession(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    session(s"local[$cores]", cores, Nil)
+
+  /** [[localSession]]'s recipe on any master, with deployment conf
+    * (`spark.jars`, A/B overrides) applied after it. Only the harness
+    * (`graft.Bench.harnessSession`) passes these. */
+  private[graft] def session(master: String, width: Int,
+      deploy: Seq[(String, String)]): SparkSession = {
+    val recipe = SparkSession.builder()
+      .master(master)
       .appName("renoirspark")
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.shuffle.partitions", width.toString)
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // wrapping Long arithmetic (minhash permutations) needs non-ANSI semantics
       .config("spark.sql.ansi.enabled", "false")
+    val spark = deploy.foldLeft(recipe) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

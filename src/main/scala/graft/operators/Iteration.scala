@@ -32,20 +32,16 @@ object Iteration {
     * dominates: measured at sf0.1 local[32], a warm connected-components
     * round is ~0.17 s with AQE off vs ~1.9 s with it on (~10x). Every loop
     * in this object therefore runs with AQE disabled and restores the
-    * previous setting on exit. Rounds whose joins are badly skewed at
-    * cluster scale are the one case where AQE's skew-join splitting can be
-    * worth the per-round overhead — opt back in with
-    * `spark.conf.set("graft.iteration.adaptive", "true")`.
+    * previous setting on exit.
     *
     * The override is session-wide while the loop runs (Spark reads the conf
     * at execution), so concurrent queries on the same session observe it;
     * loops are driver-blocking, making that window explicit. */
   private[graft] def withLoopConf[A](spark: SparkSession)(f: => A): A = {
-    val keepAqe = spark.conf.get("graft.iteration.adaptive", "false").toBoolean
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if (!keepAqe) spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try f
-    finally if (!keepAqe) spark.conf.set("spark.sql.adaptive.enabled", prev)
+    finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   /** Scoped `spark.sql.shuffle.partitions` override for driver loops. With
@@ -72,12 +68,6 @@ object Iteration {
       cap: Int = 1 << 14): Int =
     math.max(1L, rows / perPartition).min(cap.toLong).toInt
 
-  /** GRAFT_ITER_DEBUG=1 prints per-round timings to stderr. */
-  private val debug = sys.env.contains("GRAFT_ITER_DEBUG")
-  private def logRound(tag: String, i: Int, t0: Long): Unit =
-    if (debug) System.err.println(
-      f"[iter] $tag round=$i ${(System.nanoTime() - t0) / 1e9}%.2fs")
-
   /** Generic dataset fixpoint: evolve `ds` through `step` until `converged`
     * or `maxIter`. Handles caching + lineage truncation. The convergence
     * check receives (previous, next) — typically a count of changed rows
@@ -101,7 +91,6 @@ object Iteration {
       var i = 0
       var done = false
       while (i < maxIter && !done) {
-        val t0 = System.nanoTime()
         // checkpoint OR persist, never both (the deltaIterate discipline):
         // localCheckpoint already stores the rows as RDD blocks — a second
         // Dataset-layer cache would hold a full duplicate copy
@@ -114,7 +103,6 @@ object Iteration {
         curOwned = true
         cur = next
         i += 1
-        logRound("loop", i, t0)
       }
       cur
     }
@@ -134,7 +122,6 @@ object Iteration {
       var i = 0
       var done = false
       while (i < maxIter && !done) {
-        val t0 = System.nanoTime()
         val next =
           if ((i + 1) % checkpointEvery == 0) step(cur, i).localCheckpoint(false)
           else step(cur, i).persist(StorageLevel.MEMORY_AND_DISK)
@@ -145,7 +132,6 @@ object Iteration {
         curOwned = true
         cur = next
         i += 1
-        logRound("fixpoint", i, t0)
       }
       cur
     }
@@ -237,7 +223,6 @@ object Iteration {
     var prevMerged: RDD[_] = null
     var prevCheckpointed = false
     while (i < maxIter && !done) {
-      val t0 = System.nanoTime()
       val deltas = body(spark.createDataset(updates)).rdd
         .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
       val changed = deltas.filter { case (_, d) => condition(d) }.count()
@@ -278,7 +263,6 @@ object Iteration {
         deltas.unpersist(false)
       }
       i += 1
-      logRound("delta", i, t0)
     }
     val out = spark.createDataset(
       sol.mapPartitions(_.map { case (k, s) => (k, makeOutput(k, s)) },

@@ -215,8 +215,7 @@ object Scale {
     * it single-threads a 32-core executor. The rebalance shuffles only the
     * compact pre-explode rows (corpus text, not derived grams). At cluster
     * scale inputs already arrive wider than the session width and this is
-    * a no-op; streaming inputs return unchanged; disable with
-    * `graft.fanout.enabled=false`.
+    * a no-op; streaming inputs return unchanged.
     *
     * Applied ONLY where the derived-row construction dominates — measured
     * decision at sf0.1 local[32]: deletion-variant builds + banded
@@ -232,8 +231,7 @@ object Scale {
     * (min-of-3 same-window: 1.60 s without vs 2.34 s with) — re-measure
     * after any hot-path expression change. */
   def fanOut(df: DataFrame): DataFrame =
-    if (df.isStreaming ||
-        !df.sparkSession.conf.get("graft.fanout.enabled", "true").toBoolean) df
+    if (df.isStreaming) df
     else {
       val target = df.sparkSession.conf
         .get("spark.sql.shuffle.partitions", "200").toInt

@@ -213,4 +213,51 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.readPrevQueries("/nonexistent/path.json").isEmpty)
     java.nio.file.Files.delete(tmp)
   }
+
+  test("ratio_median is null, not -1.0, when no control has a positive previous time") {
+    val prev = Map("a" -> 1.0, "q_sort" -> 0.0, "q_triangles" -> 0.0)
+    val cur = Seq("a" -> 2.0, "q_sort" -> 1.0, "q_triangles" -> 1.0)
+    val (full, stdout, _) =
+      Bench.renderArtifacts(cur, 1, "0.1", "BENCH_FULL.json", prev)
+    for (out <- Seq(full, stdout)) {
+      assert(out.contains(""""ratio_median":null"""), out)
+      assert(out.contains(""""ratio_drift_adjusted":null"""), out)
+    }
+  }
+
+  test("lineOut rewrites only the file name of the full artifact") {
+    assert(Bench.lineOut("BENCH_FULL.json") == "BENCH_LINE.json")
+    assert(Bench.lineOut("BENCH_FULL_sf0.001.json") == "BENCH_LINE_sf0.001.json")
+    // a directory named after the artifact stays as it is
+    assert(Bench.lineOut("/data/BENCH_FULL/BENCH_FULL.json") ==
+      "/data/BENCH_FULL/BENCH_LINE.json")
+    assert(Bench.lineOut("/data/BENCH_FULL/run.json") ==
+      "/data/BENCH_FULL/run.json.line.json")
+  }
+
+  test("a failed BENCH_LINE write warns instead of throwing") {
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try Bench.writeLine("/nonexistent/BENCH_FULL/BENCH_LINE.json", "{}")
+    finally System.setErr(saved)
+    assert(err.toString.contains("could not write /nonexistent/BENCH_FULL/BENCH_LINE.json"),
+      err.toString)
+    val ok = java.nio.file.Files.createTempFile("bench-line", ".json")
+    Bench.writeLine(ok.toString, "{}")
+    assert(new String(java.nio.file.Files.readAllBytes(ok)) == "{}\n")
+    java.nio.file.Files.delete(ok)
+  }
+
+  test("Profile's drain poll covers every printed counter, shuffle bytes included") {
+    val c = new Profile.Counters
+    val base = c.snapshot
+    c.shufRead.addAndGet(1)
+    val afterRead = c.snapshot
+    assert(afterRead != base)
+    c.shufWrite.addAndGet(1)
+    assert(c.snapshot != afterRead)
+    c.reset()
+    assert(c.snapshot == base)
+  }
 }

@@ -1,21 +1,12 @@
 package graft
 
 import graft.api._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form golden tests mirroring the reference's per-operator test style
   * (reference: tests/aggregators.rs:6-52 etc. — sorted-collect equality
   * against hand-computed values). */
-class FacadeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class FacadeSpec extends SparkSpec {
   lazy val ctx = new StreamContext(spark)
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
 
   test("map / filter / flatMap / filterMap") {
     val s = imp

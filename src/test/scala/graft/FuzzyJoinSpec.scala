@@ -1,21 +1,13 @@
 package graft
 
 import graft.functions.FuzzyJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Deletion-neighborhood fuzzy join: must find EXACTLY the pairs the naive
   * O(n²) cross join finds at distance ≤ 1 — substitutions, insertions,
   * deletions, and the distance-2 shared-variant false-candidates ("ab"/"ba")
   * filtered back out by the residual. */
-class FuzzyJoinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class FuzzyJoinSpec extends SparkSpec {
   def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     FuzzyJoin.selfJoinWithin1(df, "id", "s")
       .select("a_id", "b_id").collect()
@@ -23,7 +15,6 @@ class FuzzyJoinSpec extends AnyFunSuite {
 
   test("equals the naive cross join on an adversarial alphabet") {
     val s = spark; import s.implicits._
-    spark.sparkContext.setLogLevel("WARN")
     // crafted cases: substitution (abc/abd), deletion (abc/ab), insertion
     // (abc/abcd), transposition at distance 2 (ab/ba — shares variants but
     // must NOT match), duplicates at distance 0, empty and 1-char strings

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Checkpoint-recovery pins for the streaming twins: the catalog's bounded
   * replay runs batches 1..n-1 in one query, HARD-STOPS it, then a fresh
@@ -16,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stream-stream join buffers (q_stream_interval_join), plus a
   * flatMapGroupsWithState machine (q_stream_sessionize) since the 18 twins
   * lean on that operator most. */
-class RecoverySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .getOrCreate()
-
+class RecoverySpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   /** Runs `streamName` through the stop/resume replay and asserts it equals

@@ -1,24 +1,14 @@
 package graft
 
 import graft.operators.Scale
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Skew + bucketing machinery: salted aggregates must equal their unsalted
   * counterparts; bucketed joins must plan WITHOUT a shuffle exchange. */
-class ScaleSpec extends AnyFunSuite {
-  // the suites share one JVM session (getOrCreate) — set the plan-shape
-  // configs at runtime and restore after, instead of builder configs that
-  // are silently ignored if another suite created the session first
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  def imp = { spark.sparkContext.setLogLevel("WARN"); spark.implicits }
-
+class ScaleSpec extends SparkSpec {
+  // the suites share one JVM session — set the plan-shape configs at
+  // runtime and restore after, so later suites see the recipe again
   def withPlanShapeConfs[A](f: => A): A = {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

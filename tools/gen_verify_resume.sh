@@ -48,5 +48,5 @@ EOF
 
 run_and_compare "" /tmp/vresume17 VERIFY_RESUME.json \
   "all 26 streaming twins through stop/resume checkpoint recovery, sf0.01"
-run_and_compare "GRAFT_STATE_STORE=rocksdb" /tmp/vresume17r VERIFY_RESUME_ROCKSDB.json \
+run_and_compare "GRAFT_CONF=spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider" /tmp/vresume17r VERIFY_RESUME_ROCKSDB.json \
   "all 26 streaming twins: checkpoint recovery composed with the RocksDB state store, sf0.01"
